@@ -34,7 +34,7 @@ in ``unstable_queries`` -- a reader of BENCH_r{N}.json alone can tell
 wobble from regression for that query family without the crossover
 prose.
 
-THE RESIDUAL SPREAD SOURCE, identified r11 (tools/ab_variance.py;
+THE RESIDUAL SPREAD SOURCE, identified r11 (SURVEY.md §8.ac;
 fully-gated window, every timed rep stamped with per-collector GC
 deltas, janino compile counts, JIT total-compile-time deltas, and the
 JVM's /proc io read_bytes): **asynchronous tiered-JIT

@@ -180,7 +180,7 @@ def exact_dedup(df: DataFrame, content_cols: list[str],
 
 SHINGLE_NGRAM = 3  # word n-gram size for MinHash/SimHash features
 
-# r13 (guide §2.2/§2.6, tools/ab_r13_minhash.py): width bound for the
+# r13 (guide §2.2/§2.6, OPTIMIZATION_r13.md §1): width bound for the
 # signature pipelines' widening repartition -- one task per ~64 KB of
 # source text, cores-capped.  The 3-gram shingle+md5+minhash stage
 # measures ~1.5 us/byte of real work, so a 64 KB task carries ~100 ms
@@ -205,27 +205,19 @@ SIGNATURE_TASK_TARGET_BYTES = 64 * 1024
 # bucket aggregate (REPARTITION_BY_NUM: coalescing-exempt, and
 # HashPartitioning(g) satisfies the aggregate's distribution so the
 # exchange count is unchanged) runs the expansion data-proportionally
-# wide.  None disables the pin (the r12 shape).  Value decided by
-# tools/ab_r13_ngram_pairstage.py: 64 KB (width 10 at sf0.1) measured
-# capped 0.863 -> 0.621 s / uncapped 0.674 -> 0.608 s, beating head in
-# every interleaved round; 32 KB within noise of 64 KB; 16 KB (full 32
-# fan-out) worse -- the same tiny-task fixed-cost curve the signature
-# pipelines measured.  The single-phase aggregate ships raw 16 B
-# postings (~3x the partial-list bytes locally, where the "network" is
-# memory); at any tier with core-wide scans the gate disables the pin
-# and the two-phase shape stands.
-NGRAM_BUCKET_TASK_TARGET_BYTES: int | None = 64 * 1024
-
-# Share one bucket-aggregate materialization between the pair branch
-# and the filter-cap drops branch (see the persist site in
-# ngram_jaccard_pairs).  A/B'd r13 and REJECTED (stays False): the
-# duplicated drops-side collect_list is ~1 s of CPU but only ~100 ms
-# of 10-wide wall, and the cache materialization + InMemoryTableScan
-# overhead gives it straight back (nopersist 0.781/0.790/0.912 s vs
-# persist 0.811/0.827/0.898 across three interleaved rounds at
-# sf0.1).  Kept as a flag because the trade flips if a tier ever
-# makes the bucket aggregate wall-dominant.
-NGRAM_PERSIST_BUCKETS = False
+# wide.  Value measured in OPTIMIZATION_r13.md §2: 64 KB (width 10 at
+# sf0.1) measured capped 0.863 -> 0.621 s / uncapped 0.674 -> 0.608 s,
+# beating head in every interleaved round; 32 KB within noise of
+# 64 KB; 16 KB (full 32 fan-out) worse -- the same tiny-task
+# fixed-cost curve the signature pipelines measured.  The
+# single-phase aggregate ships raw 16 B postings (~3x the
+# partial-list bytes locally, where the "network" is memory); at any
+# tier with core-wide scans the gate disables the pin and the
+# two-phase shape stands.  Sharing one bucket-aggregate
+# materialization between the pair and drops branches was measured
+# and rejected in the same section (cache overhead gives back the
+# ~100 ms of duplicated collect_list wall).
+NGRAM_BUCKET_TASK_TARGET_BYTES = 64 * 1024
 
 
 def _tokenized(docs: DataFrame, id_col: str, text_col: str,
@@ -743,7 +735,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # CollapseProject leaves it alone, and the generator input is
     # still the non-attribute arrays_zip, keeping the
     # InferFiltersFromGenerate exemption.  Measured 1.036 -> 1.000 s
-    # uncapped at sf0.1 (tools/ab_r12_ngram_proj.py, parity-anchored
+    # uncapped at sf0.1 (OPTIMIZATION_r12.md §2, parity-anchored
     # to the operator itself); the same fix measured -15% on
     # doc_fingerprints, whose per-doc shingle array is ~4x wider.
     dgrams = F.array_distinct(ngrams_from_tokens(F.col("_toks"), n))
@@ -808,18 +800,17 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # ObjectHashAggregate's per-element allocation and the pair
     # aggregate's key width (struct form measured 1.01 s -> 0.88 s
     # end-to-end at sf0.1, same session).
-    if NGRAM_BUCKET_TASK_TARGET_BYTES is not None:
-        # Pin the pair-expansion width (see the constant's note): the
-        # explicit gram repartition replaces the aggregate's own
-        # ENSURE_REQUIREMENTS exchange (same count, coalescing-exempt)
-        # and the aggregate runs single-phase above it.  File-gated
-        # through ensure_parallelism: inert at any tier whose scans
-        # are already core-wide.
-        from location_summary_etl_spark.session import ensure_parallelism
+    #
+    # Pin the pair-expansion width (see the constant's note): the
+    # explicit gram repartition replaces the aggregate's own
+    # ENSURE_REQUIREMENTS exchange (same count, coalescing-exempt) and
+    # the aggregate runs single-phase above it.  File-gated through
+    # ensure_parallelism: inert at any tier whose scans are already
+    # core-wide.
+    from location_summary_etl_spark.session import ensure_parallelism
 
-        postings = ensure_parallelism(
-            postings, by="g",
-            target_task_bytes=NGRAM_BUCKET_TASK_TARGET_BYTES)
+    postings = ensure_parallelism(
+        postings, by="g", target_task_bytes=NGRAM_BUCKET_TASK_TARGET_BYTES)
     groups = postings.groupBy("g").agg(F.collect_list("pk").alias("xs"))
     buckets = groups.filter(F.size("xs") >= 2)
     drops = None
@@ -902,16 +893,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     passes = _resolve_scratch_passes(postings, scratch_passes, max_df)
     if passes <= 1:
-        if filter_cap and NGRAM_PERSIST_BUCKETS:
-            # r13: under the width-pinned single-phase bucket aggregate
-            # the drops branch re-runs the whole collect_list above the
-            # reused raw-posting exchange (plan-level duplication;
-            # ReuseExchange shares only the exchange).  Caching the
-            # bucket relation makes the two branches share one
-            # materialization.  CacheManager substitutes by
-            # canonicalized plan, so the buckets/drops frames derived
-            # above hit the cache even though persist is called after.
-            groups.persist(StorageLevel.MEMORY_AND_DISK)
         return _finish(_pair_counts())
     # SCRATCH-STRIPED pair counting (module-level scratch note): each
     # stripe shuffles ~est/passes of the pair occurrences and emits
@@ -938,256 +919,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     for p_k in parts[1:]:
         out = out.unionByName(p_k)
     return out
-
-
-def ngram_jaccard_pairs_prefix(docs: DataFrame, id_col: str = "doc_id",
-                               text_col: str = "text", n: int = 3,
-                               threshold: float = 0.5) -> DataFrame:
-    """:func:`ngram_jaccard_pairs` semantics through a PREFIX-FILTERED
-    set-similarity join (Chaudhuri/Bayardo prefix filtering): identical
-    result set, candidate volume cut by ~(prefix/n)^2.
-
-    Theory: order each doc's distinct gram set by a fixed total order
-    (ascending 60-bit hash).  If J(A,B) >= t then the overlap o
-    satisfies o >= ceil(t*|A|), so at least one shared gram must land
-    in A's first |A| - ceil(t*|A|) + 1 grams (ditto B) -- posting ONLY
-    those prefix grams still surfaces every qualifying pair.
-    Candidates are then verified EXACTLY against the full sorted hash
-    arrays (``array_intersect``), so recall is 1.0 by construction,
-    not a tuning claim -- the oracle SQL is the same as the
-    unfiltered operator's.
-
-    Plan shape (3 exchanges, each smaller than the last):
-
-    1. explode -> hash (codegen, scalar -- never inside an array
-       lambda) -> groupBy(id): one sorted hash array + count per doc.
-       This relation is aggregate-sized (doc count, not gram count)
-       and serves both the prefix posting (map-side ``slice``) and
-       verification (via ``broadcast_if_small``; at warehouse scale
-       the verify join shuffles on id instead -- still candidate-
-       bounded).
-    2. prefix postings groupBy(gram): bucket-local double-explode
-       pair expansion (see ngram_jaccard_pairs).
-    3. distinct candidate pairs -> join arrays -> exact Jaccard.
-
-    When it wins -- and when it doesn't (measured): prefix filtering
-    pays off when candidates are SELECTIVE (real corpora: most doc
-    pairs share no rare gram, so the candidate set is a sliver and the
-    per-pair ``array_intersect`` verify is cheap in total).  On this
-    synthetic corpus the vocabulary is ~40 words, gram sets overlap
-    broadly at sub-threshold Jaccard, and 568k of ~12.5M possible
-    pairs survive the prefix at sf0.1 -- the per-pair verify then
-    costs more than the count-sharing aggregate of
-    :func:`ngram_jaccard_pairs`, which amortizes verification across
-    pair occurrences inside one partial-aggregated shuffle (1.2s vs
-    4.4s end-to-end).  Both stay in the corpus: selectivity, not
-    asymptotics, picks the winner, and the crossover flips on
-    real-text gram distributions -- as of r8
-    :func:`ngram_jaccard_pairs_auto` makes that pick from the bounded
-    gram-reuse probe.
-
-    SKEW POSTURE: this formulation carries NO df cap -- a ubiquitous
-    gram that lands in many documents' prefixes still builds one
-    quadratic posting list.  Prefix filtering mitigates (only grams in
-    the first ~(1-t)|A|+1 of each doc's sorted set post at all, so a
-    boilerplate gram must also hash LOW to be hot), but does not
-    bound.  It exists as the alternate physical strategy under the
-    exact-Jaccard oracle; the production default for skewed corpora is
-    :func:`ngram_jaccard_pairs`, whose ``max_df`` cap is on by
-    default.
-    """
-    from location_summary_etl_spark.session import broadcast_if_small
-
-    grams = ngrams_from_tokens(F.col("_toks"), n)
-    exploded = (
-        _tokenized(docs, id_col, text_col)
-        .select(F.col(id_col), F.explode(F.array_distinct(grams)).alias("_g0"))
-        .select(F.col(id_col), portable_hash60("_g0").alias("h"))
-    )
-    # aggregate-sized (one row per doc) and consumed three times
-    # (prefix postings + both verify sides): persist, or every
-    # broadcast build re-runs the explode+hash lineage (measured 3.4x).
-    # LIFETIME: the persist cannot be unpersisted here -- the returned
-    # DataFrame is lazy and still references it.  It is reclaimed by
-    # ``spark.catalog.clearCache()`` (bench/tests call it between
-    # queries) or LRU-evicted under memory pressure (MEMORY_AND_DISK);
-    # long-lived sessions embedding this operator should clearCache()
-    # after consuming the result.
-    arrays = exploded.groupBy(id_col).agg(
-        F.sort_array(F.collect_list("h")).alias("hs"),
-        F.count("*").alias("n_grams"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # prefix length: n - ceil(t*n) + 1 elements of the sorted set
-    t = float(threshold)
-    prefix_len = (
-        F.col("n_grams") - F.ceil(F.col("n_grams") * F.lit(t)) + F.lit(1)
-    ).cast("int")
-    postings = arrays.select(
-        F.col(id_col), F.explode(F.slice("hs", 1, prefix_len)).alias("g")
-    )
-    buckets = (
-        postings.groupBy("g")
-        .agg(F.collect_list(F.col(id_col)).alias("xs"))
-        .filter(F.size("xs") >= 2)
-    )
-    cand = (
-        buckets.select(F.explode("xs").alias("id_a"), "xs")
-        .select("id_a", F.explode("xs").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-    a = arrays.select(
-        F.col(id_col).alias("_a_id"), F.col("hs").alias("_a_hs"),
-        F.col("n_grams").alias("na"),
-    )
-    b = arrays.select(
-        F.col(id_col).alias("_b_id"), F.col("hs").alias("_b_hs"),
-        F.col("n_grams").alias("nb"),
-    )
-    verified = (
-        cand.join(broadcast_if_small(a), F.col("id_a") == F.col("_a_id"))
-        .join(broadcast_if_small(b), F.col("id_b") == F.col("_b_id"))
-        .withColumn(
-            "shared", F.size(F.array_intersect("_a_hs", "_b_hs"))
-        )
-    )
-    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    return verified.select(
-        "id_a", "id_b", round_portable(jac, 4).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
-
-
-# Auto-gate constants (r8).  The aggregate/prefix crossover is a
-# SELECTIVITY property (gram-reuse density x Jaccard threshold), not a
-# byte count, so the gate's "stat" is a constant-size sampled probe --
-# one O(sample) job at any corpus scale -- rather than file metadata.
-# The probe ratio is corpus-distinct-grams /
-# sum-of-per-doc-distinct-grams over the sample = 1 / (mean posting
-# length): ~1.0 means grams are near-unique to one doc.
-#
-# MEASURED (tools/ab_ngram_auto.py + the t=0.8 follow-up, 5,000-doc
-# corpora, interleaved min-of-3, probe-bracketed quiet windows): the
-# capped aggregate form dominates MOST of the space -- synthetic
-# shared-vocab corpus (ratio 0.63): aggregate 1.73 s vs prefix 4.08 s
-# at t=0.5, 1.41 vs 3.36 at t=0.8 (the 568k-candidate verify is the
-# prefix form's cost); rich-vocab corpus (ratio 0.99): 1.03 vs 1.11
-# at t=0.5 (aggregate still ahead), 1.21 vs 1.09 at t=0.8 (prefix's
-# ONE measured win, -10% -- short prefixes x near-unique grams leave
-# almost nothing to verify).  So the prefix form is gated on BOTH
-# conditions that produced that win, and the r7 docstring's "the
-# crossover flips on real-text gram distributions" claim is hereby
-# narrowed by measurement: it flips only at high thresholds on
-# near-unique gram universes.
-NGRAM_PROBE_DOCS = 512
-NGRAM_PREFIX_MIN_REUSE_RATIO = 0.95   # dense measured 0.63, sparse 0.99
-NGRAM_PREFIX_MIN_THRESHOLD = 0.7      # t=0.5 loses, t=0.8 wins
-
-
-def ngram_gram_reuse_probe(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", n: int = 3,
-                           sample_docs: int = NGRAM_PROBE_DOCS) -> float:
-    """Gram-reuse density over a constant-size document sample: the
-    fraction of the sample's per-doc distinct gram slots that are
-    unique corpus-wide (1 / mean posting length).  One bounded job
-    regardless of corpus size (``limit`` stops the scan after
-    ``sample_docs`` rows)."""
-    grams = ngrams_from_tokens(F.col("_toks"), n)
-    row = (
-        _tokenized(docs.select(id_col, text_col).limit(sample_docs),
-                   id_col, text_col)
-        .select(F.explode(F.array_distinct(grams)).alias("_g"))
-        .agg(F.countDistinct("_g").alias("d"), F.count("*").alias("t"))
-        .first()
-    )
-    if row is None or not row["t"]:
-        return 0.0
-    return row["d"] / row["t"]
-
-
-_CAP_UNSET = object()  # sentinel: caller did not touch the skew caps
-
-
-def ngram_jaccard_pairs_auto(docs: DataFrame, id_col: str = "doc_id",
-                             text_col: str = "text", n: int = 3,
-                             threshold: float = 0.5,
-                             prefer: str | None = None,
-                             sample_docs: int = NGRAM_PROBE_DOCS,
-                             max_df=_CAP_UNSET,
-                             cap_mode=_CAP_UNSET,
-                             scratch_passes: int | str | None = None
-                             ) -> DataFrame:
-    """Selectivity-gated form selection between
-    :func:`ngram_jaccard_pairs` (capped inverted-index aggregate --
-    the skew-safe default and the measured winner over most of the
-    space) and :func:`ngram_jaccard_pairs_prefix` (prefix-filtered
-    set-similarity join -- measured to win only when grams are
-    near-unique AND the threshold is high; constants above).
-    ``prefer=None`` runs the bounded reuse probe and requires BOTH
-    measured win conditions before picking prefix; ``prefer=
-    "aggregate"``/``"prefix"`` pins it (tests, A/B) -- the same
-    explicit-override contract as ``flagship_nation_summary
-    (use_window=...)``.  Both forms emit the identical exact-Jaccard
-    relation (same oracle), so the gate is purely physical.
-
-    CAP CONTRACT: the prefix form carries no df cap (see its SKEW
-    POSTURE), so a REQUESTED cap can only be honored by the aggregate
-    form; the gate therefore never routes such a caller to prefix (the
-    requested cap pins the aggregate form and the probe job is
-    skipped), and combining a requested cap with ``prefer="prefix"``
-    raises rather than silently dropping it.  A cap counts as
-    REQUESTED only when an effective cap exists: an explicit non-None
-    ``max_df``, or an explicit ``cap_mode`` whose ``max_df`` resolves
-    non-None (i.e. left unset, so the default applies).  An explicit
-    ``max_df=None`` is the opposite request -- NO cap -- which BOTH
-    forms honor, so it leaves the gate free even alongside an explicit
-    ``cap_mode`` (the mode is then vacuous: there is no cap for it to
-    shape; both branches emit the identical uncapped exact-Jaccard
-    relation, the oracle-stable configuration for probe-gated
-    callers).  Left fully unset, the aggregate form runs with its
-    usual DEFAULT_MAX_DF filter cap -- skew-safe, but then the gate's
-    two branches differ wherever the cap bites, so oracle-paired
-    callers should pin the form or pass ``max_df=None``."""
-    from location_summary_etl_spark.operators.gates import gate
-
-    cap_touched = (max_df is not _CAP_UNSET or cap_mode is not _CAP_UNSET)
-    max_df = DEFAULT_MAX_DF if max_df is _CAP_UNSET else max_df
-    cap_mode = "filter" if cap_mode is _CAP_UNSET else cap_mode
-    # A cap is REQUESTED only when the caller touched the cap knobs AND
-    # an effective cap exists -- explicit max_df=None is behaviorally
-    # cap-free, so it never pins the gate (explicit cap_mode alongside
-    # it is vacuous rather than a request).
-    cap_requested = cap_touched and max_df is not None
-    if prefer == "prefix" and cap_requested:
-        raise ValueError(
-            "ngram_jaccard_pairs_auto: prefer='prefix' with a requested "
-            "max_df/cap_mode is contradictory -- the prefix form carries "
-            "no df cap; call ngram_jaccard_pairs_prefix directly if the "
-            "cap is disposable, or drop prefer to keep the cap")
-
-    def _decide() -> str:
-        if cap_requested:
-            # an explicitly requested skew cap only exists in the
-            # aggregate form -- never gate it away
-            return "aggregate"
-        if threshold >= NGRAM_PREFIX_MIN_THRESHOLD:
-            ratio = ngram_gram_reuse_probe(docs, id_col, text_col, n,
-                                           sample_docs)
-            return ("prefix" if ratio >= NGRAM_PREFIX_MIN_REUSE_RATIO
-                    else "aggregate")
-        # measured: at moderate thresholds the aggregate form wins at
-        # EVERY probed reuse ratio -- skip the probe job
-        return "aggregate"
-
-    prefer = gate(prefer, _decide)
-    if prefer == "prefix":
-        return ngram_jaccard_pairs_prefix(docs, id_col, text_col, n,
-                                          threshold)
-    if prefer == "aggregate":
-        return ngram_jaccard_pairs(docs, id_col, text_col, n, threshold,
-                                   max_df=max_df, cap_mode=cap_mode,
-                                   scratch_passes=scratch_passes)
-    raise ValueError(f"prefer must be 'prefix'/'aggregate'/None, "
-                     f"got {prefer!r}")
 
 
 def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",

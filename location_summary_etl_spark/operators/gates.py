@@ -1,22 +1,19 @@
 """Shared plumbing for stats-gated dual-form operators.
 
-Three operators pick between two physically different but semantically
+Two operators pick between two physically different but semantically
 identical plans from driver-side stats (no Spark job):
 
 * ``plans.flagship.flagship_nation_summary`` -- join-form argmax while
   the max side is a cheap broadcast, window form otherwise;
 * ``operators.normalize.minmax_score_auto`` -- single-partition window
   while the lineage is provably small, distributed double-scan
-  otherwise;
-* ``operators.dedup.ngram_jaccard_pairs_auto`` -- prefix-filtered join
-  only when a bounded reuse probe shows near-unique grams at a high
-  threshold, capped inverted-index aggregate otherwise.
+  otherwise.
 
 Each previously carried its own copy of (a) the explicit-override
 contract and (b) the scaled source-bytes threshold compare with its
 conservative unknown-stats fallback.  This module is the single
 implementation; the measured per-operator constants (expansion
-factors, cap fractions, probe thresholds) stay WITH their operators,
+factors, cap fractions) stay WITH their operators,
 because they are facts about those plans, not about gating.
 
 Two further size-gate sites migrated in r11 (VERDICT #4's remaining

@@ -6,9 +6,8 @@ as literals (/root/reference/src/main/scala/App.scala:175-201).  That
 shape recomputes the upstream lineage twice (it is never cached) and
 NPEs on empty input.
 
-Three formulations (plus :func:`minmax_score_auto`, which picks
-between the first two from driver-side stats -- the flagship gate
-idiom):
+Two formulations (plus :func:`minmax_score_auto`, which picks
+between them from driver-side stats -- the flagship gate idiom):
 
 * :func:`minmax_score` -- **in-plan broadcast**: the 1-row grand-total
   aggregate is broadcast-cross-joined into the expression.  No driver
@@ -21,9 +20,6 @@ idiom):
   ``df`` is already aggregate-sized (per-group summaries: |groups|
   rows).  This is the right default for score-over-aggregate shapes
   like the flagship.
-* :func:`minmax_score_collect` -- reference-parity collect-then-literal
-  (documented for completeness; guards the empty/NPE case the
-  reference would hit).
 
 Edge case both must handle (FIXTURES.md): ``max == min`` divides by
 zero -> score NULL, never a crash.
@@ -55,7 +51,13 @@ def minmax_score_window(df: DataFrame, col: str, out_col: str) -> DataFrame:
     window.  ``df`` must be aggregate-sized (all rows land in one
     partition for the window pass) -- enforced in-plan by
     :func:`~location_summary_etl_spark.operators.windows.guarded_unpartitioned`
-    (raise_error past 100k rows), sharing the same WindowExec pass."""
+    (raise_error past 100k rows), sharing the same WindowExec pass.
+
+    The ``coalesce(1)`` below is narrow, so it serializes the caller's
+    whole PARENT stage -- everything back to ``df``'s last exchange or
+    scan runs as one task, decided statically at plan time -- not only
+    the window pass.  Callers must hand in a lineage whose last stage
+    is aggregate-sized, not merely a small result."""
     from location_summary_etl_spark.operators.windows import (
         guarded_unpartitioned,
     )
@@ -86,8 +88,8 @@ def minmax_score_window(df: DataFrame, col: str, out_col: str) -> DataFrame:
 # the lineage's SOURCE bytes staying under a quarter of the broadcast
 # cap (32 MB session cap -> 8 MB, ~100-200k parquet rows -- the same
 # order as guarded_unpartitioned's 100k-row in-plan tripwire that
-# backs this estimate at runtime).  Measured (tools/ab_minmax_auto.py,
-# quiet windows, min-of-3): the window form WINS at every legal size
+# backs this estimate at runtime).  Measured (interleaved A/B, quiet
+# windows, min-of-3): the window form WINS at every legal size
 # -- 0.14 vs 0.20 s at 7 KB, 0.17 vs 0.19 s at 260 KB source, both
 # forms floor-bound -- so unlike the flagship's crossover this gate
 # is purely a SAFETY flip: single-lineage while provably small,
@@ -121,17 +123,3 @@ def minmax_score_auto(df: DataFrame, col: str, out_col: str,
         return minmax_score_window(df, col, out_col)
     return minmax_score(df, col, out_col)
 
-
-def minmax_score_collect(df: DataFrame, col: str, out_col: str) -> DataFrame:
-    """Reference-shaped variant: blocking ``.first()`` mid-plan, min/max
-    re-embedded as literals (App.scala:175-185, 191-201)."""
-    row = df.agg(F.min(col).alias("mn"), F.max(col).alias("mx")).first()
-    if row is None or row["mn"] is None:
-        # Reference would NPE on Row.getDouble; we return NULL scores.
-        return df.withColumn(out_col, F.lit(None).cast("double"))
-    mn, mx = float(row["mn"]), float(row["mx"])
-    if mx == mn:
-        return df.withColumn(out_col, F.lit(None).cast("double"))
-    return df.withColumn(
-        out_col, (F.col(col) - F.lit(mn)) / F.lit(mx - mn) * F.lit(100.0)
-    )

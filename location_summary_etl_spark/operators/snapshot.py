@@ -18,7 +18,7 @@ cardinality is dimension-like.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -79,7 +79,3 @@ def global_latest_filter(df: DataFrame, date_col: str) -> DataFrame:
         .drop("__global_max")
     )
 
-
-def max_over(df: DataFrame, col: str) -> Column:
-    """Grand-total MAX as a 1x1 DataFrame (SURVEY §2 A6)."""
-    return df.agg(F.max(col).alias("max_" + col))

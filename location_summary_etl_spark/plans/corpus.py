@@ -91,7 +91,7 @@ _DRIVER_SAMPLED_PRIOR = frozenset({
     "dedup_minhash_lsh", "dedup_minhash_lsh_capped",
     "dedup_minhash_lsh_uncapped", "dedup_minhash_signatures",
     "dedup_ngram_jaccard", "dedup_ngram_jaccard_capped",
-    "dedup_ngram_jaccard_prefix", "dedup_ngram_jaccard_uncapped",
+    "dedup_ngram_jaccard_uncapped",
     "dedup_semantic_kmeans", "dedup_simhash_pairs",
     "dedup_simhash_signatures", "doc_chunks_udtf",
     "doc_token_map_stats", "embedding_kmeans", "embedding_label_norms",

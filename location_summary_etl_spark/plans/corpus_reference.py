@@ -43,7 +43,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # file scans as ONE partition, so the per-custkey argmax otherwise runs
 # serially in the scan stage; hash-partitioning by o_custkey REPLACES
 # the exchange the window/aggregate needed).  Interleaved A/B
-# (tools/ab_r12_scanwiden.py): 0.190 -> 0.168 and 0.231 -> 0.204 s
+# (OPTIMIZATION_r12.md §4): 0.190 -> 0.168 and 0.231 -> 0.204 s
 # (-11%) across two sessions.  No-op at production scale (file gate).
 def latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = ensure_parallelism(_t(spark, sf_dir, "orders"), by="o_custkey")
@@ -95,7 +95,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate function children do not get the cross-expression CSE a
     # Project's codegen does.  _charge keeps the original association
     # (disc * (1 + tax)), so the doubles -- and the oracle hash -- are
-    # bit-identical.  Interleaved A/B (tools/ab_r12_q1proj.py):
+    # bit-identical.  Interleaved A/B (OPTIMIZATION_r12.md §6):
     # 0.681 -> 0.601 s (-12%).
     pre = (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp_ntz"))
@@ -456,11 +456,11 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates at this tier); at 100 TB the win is 3x the fact volume
     through the widest aggregate.
 
-    MEASURED FLOOR (r8, tools/decompose_r8.py, probe-bracketed quiet
-    window [0.95, 0.95], min-of-4 interleaved, cumulative stages at
-    sf10): customer (nationkey, acctbal) bare scan 0.052 s; + both
-    broadcast dim joins 0.127 s; + the (r_name, n_name) hash
-    aggregate 0.219 s; full query 0.237 s.  The rollup machinery
+    MEASURED FLOOR (r8, BENCH_CROSSOVER.md "r8 refresh notes",
+    probe-bracketed quiet window [0.95, 0.95], min-of-4 interleaved,
+    cumulative stages at sf10): customer (nationkey, acctbal) bare
+    scan 0.052 s; + both broadcast dim joins 0.127 s; + the (r_name,
+    n_name) hash aggregate 0.219 s; full query 0.237 s.  The rollup machinery
     (Expand over the 130-row pre-aggregate + merge) adds 0.018 s --
     8% -- so the 12.2x-vs-DuckDB deep ratio is scan + broadcast-probe
     + hash-agg fixed cost over 1.5M rows, flat across the 100x tier

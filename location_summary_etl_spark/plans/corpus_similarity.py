@@ -352,7 +352,7 @@ register("ann_topk_ivf_quantized", ann_topk_ivf_quantized, _IVF_Q8_SQL)
 # R for the refined corpus entry: 4x k, the low end of the standard
 # refine band.  The oracle mirrors the SAME truncation (quantized
 # top-R then float rescore), so the pairing is exact at ANY R; the
-# accuracy-vs-R trade itself is measured in tools/ab_ann_refine.py
+# accuracy-vs-R trade itself is recorded in SURVEY.md §8.ab
 # (sf10: R=4k stays at the bare-int8 0.80 agreement because this
 # corpus packs top cosines within the ~1e-3 quantization error,
 # R=10k measures 1.00).
@@ -366,7 +366,7 @@ def ann_topk_ivf_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     page-level pruning), and the final top-k is ranked by EXACT float
     cosine -- the standard IVF answer to the quantized path's ~0.80
     top-10 agreement (measured 1.00 at R=10k on the sf10 tier,
-    tools/ab_ann_refine.py) while the bulk scan stays 1 byte/dim.
+    SURVEY.md §8.ab) while the bulk scan stays 1 byte/dim.
     Output carries ``cosine`` (exact float scores), oracle-paired with
     the same quantized CTEs plus a float-rescore layer."""
     from location_summary_etl_spark.operators.ann_index import (
@@ -448,7 +448,7 @@ def ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     sandwich recall_ivf >= recall_refined >= recall_quantized cannot).
     Measured here (2026-08-15): sf0.01 all three paths agree per
     query (0.2-0.6 -- toy-scale labels probe poorly); the accuracy-
-    vs-R trade at depth is measured in tools/ab_ann_refine.py."""
+    vs-R trade at depth is recorded in SURVEY.md §8.ab."""
     from location_summary_etl_spark.operators.ann_index import (
         build_ivf_index,
         ivf_query_index,

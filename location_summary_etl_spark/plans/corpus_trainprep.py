@@ -139,6 +139,8 @@ def corpus_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted index with collect_set + explode; the flat
     distinct+broadcast form measured ~10% faster with an identical
     result and strictly smaller aggregate state.)"""
+    from location_summary_etl_spark.operators.gates import source_fits
+
     docs = load_table(spark, sf_dir, "documents")
     is_eval = (F.col("doc_id") % EVAL_MOD == 0) & (
         F.col("doc_id") < EVAL_MAX_DOC_ID)
@@ -151,7 +153,13 @@ def corpus_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count-bound (REST profile: ~0.13 s of task time inside a
     # ~0.65 s wall, the rest inter-stage orchestration).  r13 A/B,
     # three interleaved rounds: part of 0.546-0.653 -> 0.466-0.500 s.
-    ev_post = _ngram_stream(docs.filter(is_eval), widen=False).coalesce(1)
+    # But coalesce(1) has no exchange below it, so it also collapses
+    # the documents SCAN feeding the eval filter into one task: only
+    # while the source provably fits the broadcast cap; past it the
+    # scan stays parallel and the distinct keeps its exchange.
+    ev_post = _ngram_stream(docs.filter(is_eval), widen=False)
+    if source_fits(docs):
+        ev_post = ev_post.coalesce(1)
     eval_hashes = ev_post.select("h").distinct()
     train_hits = (
         _ngram_stream(docs.filter(~is_eval))

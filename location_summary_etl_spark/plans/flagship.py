@@ -58,8 +58,9 @@ form already wins at sf1 (0.46 vs 0.63 s) and ties at sf0.1, so the
 gate flips between those tiers; at bench scale it keeps the join form.
 
 MEASURED FLOOR for the window form's sf10 residue (r8,
-tools/decompose_r8.py, probe-bracketed quiet window [0.92..1.29 s],
-min-of-4 interleaved noop-sink runs, cumulative stages):
+BENCH_CROSSOVER.md "r8 refresh notes", probe-bracketed quiet window
+[0.92..1.29 s], min-of-4 interleaved noop-sink runs, cumulative
+stages):
 
     orders (custkey, date, totalprice) bare scan   0.104 s
     + hash exchange on o_custkey                   0.861 s

@@ -53,7 +53,7 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     DATA-PROPORTIONAL size -- ``ceil(source_bytes / target)``, still
     cores-capped -- instead of the unconditional core-width fan-out.
     Motivation (guide §2.2/§2.6 tiny-task overhead, measured
-    tools/ab_r13_minhash.py): dedup_minhash_lsh at sf0.1 widens 594 KB
+    OPTIMIZATION_r13.md §1): dedup_minhash_lsh at sf0.1 widens 594 KB
     of documents to 32 tasks of ~18 KB, and the stage's total
     executorRunTime measures 6838 ms at width 32 vs 910 ms at width 8
     for identical work -- per-task fixed cost (aggregate-buffer
@@ -72,7 +72,7 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     so the driver's scaling comparison sees matched plans).
 
     ``by`` (r12): hash-partition on a UNIQUE id column instead of
-    round-robin.  Two measured effects (tools/ab_r12_parallelism.py,
+    round-robin.  Two measured effects (OPTIMIZATION_r12.md §1,
     interleaved same-session min-of-8 at sf0.1):
 
     - every keyless ``repartition(n)`` first pays a LOCAL SORT of its

@@ -511,7 +511,7 @@ def foreach_batch_indexed_ingest(stream_df: DataFrame, table, index_root,
     refresh no-ops (base unchanged -> current generation returned
     without a write).  Idempotent end-to-end, no 2-phase anything.
 
-    MEASURED per-batch cost (tools/ab_stream_ingest.py, sf10 tier =
+    MEASURED per-batch cost (SURVEY.md §8.aa, sf10 tier =
     200k vectors, probe-bracketed quiet window, 2026-08-15): the
     refresh is a FIXED ~2.0-2.6 s regardless of batch size -- batches
     of 200 / 1000 / 4000 rows refresh in ~2.6 / 2.2 / 2.2 s (13 ->

@@ -1,8 +1,8 @@
 """operators/gates.py -- the single implementation behind every
-stats-gated dual-form operator (flagship argmax, minmax_score_auto,
-ngram_jaccard_pairs_auto).  The per-operator flip behavior is covered
-by their own tests (test_operators.py, test_plans.py); these pin the
-shared contract itself."""
+stats-gated dual-form operator (flagship argmax, minmax_score_auto).
+The per-operator flip behavior is covered by their own tests
+(test_operators.py, test_plans.py); these pin the shared contract
+itself."""
 
 import pytest
 
@@ -109,8 +109,6 @@ def test_tiny_dim_bytes_pregate_refuses_before_reading(sf_dir, monkeypatch):
      ["gate", "source_fits"]),
     ("location_summary_etl_spark.operators.normalize",
      ["minmax_score_auto"]),
-    ("location_summary_etl_spark.operators.dedup",
-     ["ngram_jaccard_pairs_auto"]),
     ("location_summary_etl_spark.session",
      ["broadcast_if_small"]),
     ("location_summary_etl_spark.sources.registry",

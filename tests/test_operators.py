@@ -2088,109 +2088,6 @@ def test_minmax_score_auto_flips_on_source_bytes(spark, sf_dir):
         spark.conf.set(cap_conf, old)
 
 
-def test_ngram_auto_selects_by_reuse_probe_and_threshold(spark):
-    """ngram_jaccard_pairs_auto: prefix is picked ONLY under both
-    measured win conditions (reuse probe >= NGRAM_PREFIX_MIN_REUSE_
-    RATIO and threshold >= NGRAM_PREFIX_MIN_THRESHOLD); every other
-    cell of the (corpus, threshold) grid takes the aggregate form --
-    the r8 measurement grid (operators/dedup.py constants).  Asserted
-    on plan shape; pins override; both forms emit the identical
-    relation."""
-    from location_summary_etl_spark.operators.dedup import (
-        NGRAM_PREFIX_MIN_REUSE_RATIO,
-        ngram_gram_reuse_probe,
-        ngram_jaccard_pairs_auto,
-    )
-
-    dense = spark.createDataFrame(
-        [(i, "alpha beta gamma delta alpha beta gamma") for i in range(40)],
-        "doc_id long, text string")
-    sparse = spark.createDataFrame(
-        [(i, " ".join(f"u{i}w{j}" for j in range(8))) for i in range(40)],
-        "doc_id long, text string")
-
-    r_dense = ngram_gram_reuse_probe(dense)
-    r_sparse = ngram_gram_reuse_probe(sparse)
-    assert r_dense < NGRAM_PREFIX_MIN_REUSE_RATIO < r_sparse, (
-        r_dense, r_sparse)
-
-    def form(df):
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        return "prefix" if "array_intersect" in opt else "aggregate"
-
-    # the one measured-win cell: sparse grams AND high threshold
-    assert form(ngram_jaccard_pairs_auto(sparse, threshold=0.8)) == "prefix"
-    # every other cell: aggregate
-    assert form(ngram_jaccard_pairs_auto(sparse)) == "aggregate"  # t=0.5
-    assert form(ngram_jaccard_pairs_auto(dense, threshold=0.8)) == "aggregate"
-    assert form(ngram_jaccard_pairs_auto(dense)) == "aggregate"
-    # explicit pins beat the gate in both directions
-    assert form(ngram_jaccard_pairs_auto(dense, prefer="prefix")) == "prefix"
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, prefer="aggregate")) == "aggregate"
-
-    a = sorted(str(r) for r in ngram_jaccard_pairs_auto(
-        sparse, prefer="aggregate").collect())
-    b = sorted(str(r) for r in ngram_jaccard_pairs_auto(
-        sparse, prefer="prefix").collect())
-    assert a == b
-
-
-def test_ngram_auto_requested_cap_is_never_gated_away(spark):
-    """The r9 cap contract (ADVICE r8): a caller who REQUESTS a cap
-    (non-None max_df, or an explicit cap_mode) is asking for skew
-    safety, which only the aggregate form provides -- the gate must
-    pin aggregate even in prefix's measured-win cell (and skip the
-    probe job), and the contradictory prefer='prefix' + requested-cap
-    combination raises instead of silently dropping the cap.  An
-    explicit max_df=None is the OPPOSITE request (no cap, which both
-    forms honor) and leaves the gate free -- the oracle-stable
-    configuration the probe-gated corpus entry uses."""
-    import pytest as _pytest
-
-    from location_summary_etl_spark.operators.dedup import (
-        ngram_jaccard_pairs_auto,
-    )
-
-    sparse = spark.createDataFrame(
-        [(i, " ".join(f"u{i}w{j}" for j in range(8))) for i in range(40)],
-        "doc_id long, text string")
-
-    def form(df):
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        return "prefix" if "array_intersect" in opt else "aggregate"
-
-    # sparse + t=0.8 is the prefix win cell (asserted above); a
-    # requested cap must override it in both spellings
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, max_df=100)) == "aggregate"
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, cap_mode="census")) == "aggregate"
-    # explicit max_df=None = cap-free: the gate stays free and still
-    # picks prefix in its win cell
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, max_df=None)) == "prefix"
-
-    with _pytest.raises(ValueError, match="contradictory"):
-        ngram_jaccard_pairs_auto(sparse, threshold=0.8, prefer="prefix",
-                                 max_df=100)
-    # an explicit cap_mode whose max_df is left to default IS an
-    # effective-cap request, so it is contradictory with prefix too
-    with _pytest.raises(ValueError, match="contradictory"):
-        ngram_jaccard_pairs_auto(sparse, threshold=0.8, prefer="prefix",
-                                 cap_mode="census")
-    # prefix + cap-free is NOT contradictory
-    ngram_jaccard_pairs_auto(sparse, threshold=0.8, prefer="prefix",
-                             max_df=None)
-    # ADVICE r9: explicit cap_mode ALONGSIDE explicit max_df=None is
-    # behaviorally cap-free (no cap for the mode to shape) -- it must
-    # neither pin the gate nor count as contradictory with prefix
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, max_df=None, cap_mode="census")) == "prefix"
-    ngram_jaccard_pairs_auto(sparse, threshold=0.8, prefer="prefix",
-                             max_df=None, cap_mode="census")
-
-
 def test_fixed_point_aggregates_exact_and_order_free(spark):
     # The fixed-point policy's core claim: unit sums equal the exact
     # decimal result bit-for-bit and do not move under repartitioning,

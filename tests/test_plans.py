@@ -538,7 +538,7 @@ def test_q3_revenue_aggregates_below_the_join(spark, sf_dir):
     orderkey exchange then carries one row per open order instead of
     ~4 lineitems.  In the optimized logical plan the Join must be the
     Aggregate's parent -- printed first -- not the other way around.
-    Interleaved A/B (tools/ab_q3_eager_agg.py): 0.73 s vs 0.88 s at
+    Interleaved A/B (SURVEY.md §8.z): 0.73 s vs 0.88 s at
     sf1, 5.70 s vs 6.84 s at sf10, identical result sets."""
     extended = plan_of(spark, "order_shipping_priority", sf_dir,
                        mode="extended")
@@ -699,7 +699,7 @@ def test_minhash_widening_is_data_proportional(spark):
     """The signature pipeline's widening exchange is sized by source
     bytes (SIGNATURE_TASK_TARGET_BYTES), not pinned to core width:
     32 tasks of ~18 KB measured 7.5x the executorRunTime of 8 tasks of
-    ~74 KB on identical work (tools/ab_r13_minhash.py) and inverted
+    ~74 KB on identical work (OPTIMIZATION_r13.md §1) and inverted
     the driver's c8/c32 scaling.  Bytes-derived width keeps the plan
     matched across core counts."""
     from location_summary_etl_spark.operators.dedup import (
@@ -709,7 +709,7 @@ def test_minhash_widening_is_data_proportional(spark):
     want = _expected_bounded_width(
         spark, f"{SF_BENCH}/documents.parquet", SIGNATURE_TASK_TARGET_BYTES)
     plan = plan_of(spark, "dedup_minhash_lsh", SF_BENCH)
-    assert f"hashpartitioning(doc_id#" in plan
+    assert "hashpartitioning(doc_id#" in plan
     reps = [l for l in plan.splitlines()
             if "REPARTITION_BY_NUM" in l and "hashpartitioning(doc_id" in l]
     assert reps, "widening repartition missing from the minhash plan"
@@ -721,14 +721,13 @@ def test_ngram_pair_stage_exchange_is_pinned(spark):
     """The gram-bucket exchange is REPARTITION_BY_NUM (coalescing-
     exempt) at data-proportional width: AQE's byte-sized coalescing ran
     the quadratic pair expansion on 4 of 32 cores
-    (tools/ab_r13_ngram_pairstage.py, 0.863 -> 0.621 s).  The pin
+    (OPTIMIZATION_r13.md §2, 0.863 -> 0.621 s).  The pin
     replaces the aggregate's ENSURE_REQUIREMENTS exchange, so the
     exchange count must not grow."""
     from location_summary_etl_spark.operators.dedup import (
         NGRAM_BUCKET_TASK_TARGET_BYTES,
     )
 
-    assert NGRAM_BUCKET_TASK_TARGET_BYTES is not None
     want = _expected_bounded_width(
         spark, f"{SF_BENCH}/documents.parquet", NGRAM_BUCKET_TASK_TARGET_BYTES)
     plan = plan_of(spark, "dedup_ngram_jaccard", SF_BENCH)
@@ -754,7 +753,9 @@ def test_contamination_eval_side_plans_single_partition(spark):
     by construction, so its postings coalesce(1) statically -- which
     deletes the eval distinct's exchange AND the final per-doc
     groupBy's exchange (6 -> 4 at sf0.1; the check is stage-count
-    bound at bench scale)."""
+    bound at bench scale).  The coalesce also serializes the documents
+    scan below it, so it applies only while that source fits the
+    broadcast cap."""
     plan = plan_of(spark, "corpus_contamination_check", SF_BENCH)
     n_shuffle = sum(
         1 for l in plan.splitlines()
@@ -764,3 +765,13 @@ def test_contamination_eval_side_plans_single_partition(spark):
     # the broadcasts are separate nodes.
     assert "Coalesce" in plan, "eval-side coalesce(1) missing"
     assert n_shuffle <= 2, f"expected <=2 shuffle exchanges, got {n_shuffle}"
+    # Past the broadcast cap the source is not provably small: the
+    # coalesce would serialize the whole documents scan, so it is gone.
+    cap_conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(cap_conf)
+    try:
+        spark.conf.set(cap_conf, "1KB")
+        plan = plan_of(spark, "corpus_contamination_check", SF_BENCH)
+    finally:
+        spark.conf.set(cap_conf, old)
+    assert "Coalesce" not in plan, "eval-side coalesce(1) above the cap"

@@ -6,7 +6,7 @@ rot silently.  This leg keeps a canary burning: every suite run picks a
 DETERMINISTIC DAY-ROTATED subset of the corpus (the same rotation
 ``soak_oracle.py --sample N`` uses, so a local `pytest` day and a
 `--sample` cron day cover the same slice) and runs the driver-identical
-oracle compare at the sf1 tier.  Over ~ceil(166/N) days of runs the
+oracle compare at the sf1 tier.  Over ~ceil(165/N) days of runs the
 rotation covers the whole corpus; any day's failure names the exact
 entry.
 

@@ -7,9 +7,9 @@ that covers the invocation, so every timing harness gates on this
 probe instead of trusting its own repeats.
 
 Two uses:
-- ``wait_quiet()`` before a timing run: poll until the probe clears
-  the threshold (or attempts run out), so runs start in a quiet
-  window by construction.
+- ``wait_quiet_all()`` before a timing run: poll until the probes
+  (this one and the second class below) clear their thresholds, or
+  attempts run out, so runs start in a quiet window by construction.
 - ``probe()`` between engine passes: stamp each pass's window so the
   artifact itself says which cells are trustworthy -- a pass is
   "quiet" iff the probes on both sides of it cleared the threshold.
@@ -24,8 +24,8 @@ text_fingerprints 0.545 vs 0.747) while CPU-bound queries agreed --
 some co-tenant contention classes (IO / page-cache / bandwidth
 sub-regimes) pass the gate.  So: the gate makes single artifacts
 honestly labelled, but cross-window deltas are still only suggestive;
-the authoritative comparison remains the interleaved same-session A/B
-(tools/ab_*.py pattern), and bench.py's min-across-passes defends
+the authoritative comparison remains the interleaved same-session A/B,
+and bench.py's min-across-passes defends
 against within-run flips.
 
 Second probe class (r9, addressing that LIMIT): :func:`probe_mt` runs
@@ -141,27 +141,6 @@ def probe_mt(threads: int = MT_THREADS, runs: int = 4,
     return min(round_of(), round_of())
 
 
-def wait_quiet(
-    threshold: float = QUIET_SEC,
-    attempts: int = 10,
-    sleep_sec: float = 60.0,
-) -> list[float]:
-    """Poll the probe until it clears ``threshold``; returns every
-    probe value observed (last one <= threshold means quiet was
-    reached; otherwise the caller proceeds tagged-noisy rather than
-    refusing -- an unattended driver run must still produce an
-    artifact, just an honestly labelled one)."""
-    vals: list[float] = []
-    for i in range(attempts):
-        p = probe()
-        vals.append(p)
-        if p <= threshold:
-            return vals
-        if i + 1 < attempts:
-            time.sleep(sleep_sec)
-    return vals
-
-
 def wait_quiet_all(
     threshold: float = QUIET_SEC,
     bw_threshold: float = MT_QUIET_SEC,
@@ -171,9 +150,10 @@ def wait_quiet_all(
     """The r10 startup gate: poll until ONE window clears BOTH probe
     classes -- arithmetic (CPU steal) and multi-threaded streaming
     (aggregate memory bandwidth, the contention class the arithmetic
-    probe is blind to).  Returns both observation lists; same
-    proceed-tagged-noisy contract as :func:`wait_quiet` when attempts
-    run out."""
+    probe is blind to).  Returns both observation lists; when attempts
+    run out the caller proceeds tagged-noisy rather than refusing -- an
+    unattended driver run must still produce an artifact, just an
+    honestly labelled one."""
     vals: list[float] = []
     bw_vals: list[float] = []
     for i in range(attempts):

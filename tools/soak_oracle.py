@@ -107,7 +107,7 @@ Usage:
         --sample deterministic rotating subset of N entries: entry
                  list sorted, rotated by day-of-year, first N taken
                  -- a CI-sized scale-correctness canary that cycles
-                 through the whole corpus over ~ceil(166/N) days
+                 through the whole corpus over ~ceil(165/N) days
                  without ever re-picking the same slice two days
                  running.  Implies the --only merge semantics.
 
@@ -160,7 +160,6 @@ UI_PORT = int(os.environ.get("SOAK_UI_PORT", "4049"))
 ORACLE_STRIPE_COLS = {
     "dedup_ngram_jaccard": "id_a",
     "dedup_ngram_jaccard_auto": "id_a",
-    "dedup_ngram_jaccard_prefix": "id_a",
     "dedup_ngram_jaccard_uncapped": "id_a",
     "dedup_ngram_jaccard_capped": "id_a",
 }
